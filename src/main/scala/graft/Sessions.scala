@@ -20,33 +20,7 @@ object Sessions {
       .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // Coalesce small shuffle reads to the ADVISORY SIZE instead of
-      // preserving parallelism (guide §2.2 "fewer, larger reduce
-      // partitions" / §9): with the default parallelism-first rule a
-      // KB-sized shuffle still fans out one task per core, and the
-      // per-task constant cost dominates every small stage — the r17
-      // scaling record measured 207/250 queries FASTER at 8 cores
-      // than 32 for exactly this reason. Size-based coalescing is
-      // also the documented recommendation for busy production
-      // clusters, and it is scale-ADAPTIVE by construction: partitions
-      // grow back automatically once post-shuffle bytes approach the
-      // 64 MB advisory target (the 100 TB case), so nothing here is
-      // tuned to the local core count. Env-overridable for A/B runs.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true"))
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // Streaming state store provider, env-overridable for A/B runs
-      // (guide §5): RocksDB
-      // (org.apache.spark.sql.execution.streaming.state.
-      // RocksDBStateStoreProvider) was measured against the default
-      // HDFS-backed provider on the 5 heaviest stateful streams at
-      // sf0.1 — see OPTIMIZATION_r18.md for the numbers and the
-      // decision; the state here is dimension-bounded (≤600 k keys),
-      // where the in-memory map wins, while a deployment with
-      // state >> heap sets the RocksDB provider via this knob.
-      .config("spark.sql.streaming.stateStore.providerClass",
-        sys.env.getOrElse("SPARK_GRAFT_STATE_PROVIDER",
-          "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"))
       .config("spark.sql.autoBroadcastJoinThreshold", (64 * 1024 * 1024).toString)
       // HotSpot refuses to JIT methods over 8000 bytecodes
       // (-XX:DontCompileHugeMethods), so a whole-stage-codegen method

@@ -98,9 +98,8 @@ object AnnOps {
     * `ivf_probe_sweep` and `graph_walk_sweep` each re-paid the full
     * corpus×queries cross + rank window per call (0.6-1.2 s each at
     * sf0.1). A production eval harness persists its ground-truth
-    * pairs for exactly this reason. Released by [[clearKnnCache]]. */
-  private val bruteTopkCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+    * pairs for exactly this reason. Released by [[Caches.clearAll]]. */
+  private val bruteTopkCache = new Caches.PerDir[DataFrame](Caches.releaseCheckpointed)
 
   /** Sign-bit bucket id from `n` hyperplane projections starting at
     * global plane index `off`; the plane is a foldable literal array,
@@ -276,14 +275,13 @@ object AnnOps {
     * materialization (charged to the bench's named setup), four
     * narrow columns. Parameterized nCells ≠ [[NCells]] calls (the
     * tuning specs) still assign fresh. Released by
-    * [[clearKnnCache]]. */
+    * [[Caches.clearAll]]. */
   private[operators] def assignedCells(s: SparkSession, d: String): DataFrame =
     cellAssignCache.computeIfAbsent(d, _ =>
       assignCells(vectors(s, d), centroidTable(s, NCells))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
-  private val cellAssignCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  private val cellAssignCache = new Caches.PerDir[DataFrame](Caches.unpersist)
 
   /** IVF ANN: vectors partition into centroid cells; each query scans
     * only its nProbe closest cells — the coarse-quantizer analogue of
@@ -376,43 +374,13 @@ object AnnOps {
     * disease, same cure: one materialization of a ≤ KnnK·N-row
     * projection feeds them all (a production pipeline persists its
     * kNN index as a TABLE for exactly this reason). Lifetime mirrors
-    * the signature cache; [[clearKnnCache]] between corpus versions. */
-  private val knnCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  def clearKnnCache(): Unit = {
-    knnCache.values.forEach(df => { df.unpersist(); () })
-    knnCache.clear()
-    // labels derive from the graph — drop them together
-    clusterCache.values.forEach(df => { df.unpersist(); () })
-    clusterCache.clear()
-    // the NN-descent-refined edge table and the persisted walk
-    // results derive from the graph too
-    refineCache.values.forEach(df => { df.unpersist(); () })
-    refineCache.clear()
-    walkCache.values.forEach(df => { df.unpersist(); () })
-    walkCache.clear()
-    // the coarse-quantizer assignment table (the persisted inverted
-    // file) is per-corpus state like the rest
-    cellAssignCache.values.forEach(df => { df.unpersist(); () })
-    cellAssignCache.clear()
-    // the brute-force ground-truth table is per-corpus eval state
-    // (checkpointed, so release via the LogicalRDD handle)
-    bruteTopkCache.values.forEach(Caches.releaseCheckpointed(_))
-    bruteTopkCache.clear()
-    // the PQ-encoded corpus is a per-corpus index artifact like the
-    // inverted file
-    pqReconCache.values.forEach(Caches.releaseCheckpointed(_))
-    pqReconCache.clear()
-    // GraphOps' canonical edge table derives from the graph too
-    GraphOps.clearEdgeCache()
-  }
+    * the signature cache; [[Caches.clearAll]] between corpus versions. */
+  private val knnCache = new Caches.PerDir[DataFrame](Caches.unpersist)
 
   /** Cluster labels for the default tail threshold, cached per dir:
     * `diversity_sample` re-runs the whole propagation otherwise. The
     * spec's forced-path variants (explicit tailMax) bypass this. */
-  private val clusterCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  private val clusterCache = new Caches.PerDir[DataFrame](Caches.unpersist)
 
   /** Warm the shared ANN index tables (kNN edges + cluster labels +
     * the refined edge table + the two persisted walk results + the
@@ -495,7 +463,7 @@ object AnnOps {
     * corpus-quadratic; each round's scored set is pinned with a lazy
     * localCheckpoint so the unrolled loop never re-derives earlier
     * rounds (the kmeans_fit rule). Cached per dir like the graph
-    * itself ([[clearKnnCache]]); `ann_recall_report`'s 7th variant
+    * itself ([[Caches.clearAll]]); `ann_recall_report`'s 7th variant
     * walks THIS graph. */
   def knnRefine(s: SparkSession, d: String): DataFrame =
     refineCache.computeIfAbsent(d, _ => buildKnnRefine(s, d)
@@ -527,8 +495,7 @@ object AnnOps {
   private[operators] def descentKAt(r: Int): Int =
     math.min(RefineK, KnnK << r)
 
-  private val refineCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  private val refineCache = new Caches.PerDir[DataFrame](Caches.unpersist)
 
   private def buildKnnRefine(s: SparkSession, d: String): DataFrame = {
     val v = vectors(s, d)
@@ -632,8 +599,7 @@ object AnnOps {
       .select("q_id", "vec_id", "rnk", "cosine")
 
   /** Per-(dir, graph-variant) persisted walk VISITED sets. */
-  private val walkCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  private val walkCache = new Caches.PerDir[DataFrame](Caches.unpersist)
 
   /** Parameterized walk ([[annGraphSearch]] = the gate-pinned
     * constants): seeds/beam/rounds are the serving-time recall/cost
@@ -1141,9 +1107,8 @@ object AnnOps {
     * is the INDEX BUILD of the PQ family, and `ann_pq_topk` and
     * `ann_ivf_pq_topk` each re-ran it per call (~0.6-1.2 s each at
     * sf0.1). A production PQ/IVF-PQ deployment stores exactly this
-    * table (the FAISS index file). Released by [[clearKnnCache]]. */
-  private val pqReconCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+    * table (the FAISS index file). Released by [[Caches.clearAll]]. */
+  private val pqReconCache = new Caches.PerDir[DataFrame](Caches.releaseCheckpointed)
 
   def annPqTopk(s: SparkSession, d: String): DataFrame = {
     pqRecon(s, d)

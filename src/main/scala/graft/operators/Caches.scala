@@ -1,57 +1,82 @@
 package graft.operators
 
-/** Single release switch for every per-data-dir session cache the
-  * operator families keep (signature/segment/dup-label tables, the
-  * token projection, HLL register tables, the ABWD pair table). The
-  * caches are intentionally session-long for the gate and bench runs —
-  * a long-lived service calls this between corpus versions, and the
-  * test/verify mains call it at teardown so no path leaks persisted
-  * or checkpointed blocks for the life of the JVM. */
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** The registry of per-data-dir session artifacts (signature/segment/
+  * dup-label tables, the token projection, HLL register tables, the
+  * ABWD pair table, the ANN index tables, table readers, streaming run
+  * outputs). Each artifact is a [[PerDir]] map that registers itself
+  * on construction together with the rule that releases one of its
+  * values, so [[clearAll]] reaches every artifact by construction —
+  * there is no hand-kept call list a new artifact can be left out of
+  * (one that is would serve stale tables after a corpus swap). The
+  * artifacts are intentionally session-long for the gate and bench runs — a
+  * long-lived service calls [[clearAll]] between corpus versions, and
+  * the test/verify mains call it at teardown so no path leaks
+  * persisted or checkpointed blocks for the life of the JVM. */
 object Caches {
 
-  /** Release a cache entry that is an EAGER LOCAL CHECKPOINT:
-    * Dataset.unpersist does not reach a local checkpoint's RDD-level
-    * blocks, so release goes through the LogicalRDD handle (the
-    * abwdPairCache rule, shared here for every checkpointed cache). */
-  def releaseCheckpointed(df: org.apache.spark.sql.DataFrame): Unit =
+  /** One per-dir artifact: string-keyed values built once by
+    * [[computeIfAbsent]] and released by `release` on [[remove]] or
+    * [[clearAll]]. */
+  final class PerDir[V](release: V => Unit) {
+    private val m = new java.util.concurrent.ConcurrentHashMap[String, V]()
+    registry.add(this)
+
+    def computeIfAbsent(key: String, build: String => V): V =
+      m.computeIfAbsent(key, k => build(k))
+
+    def put(key: String, v: V): Unit = { m.put(key, v); () }
+
+    /** Drop `key`'s entry and release its value. */
+    def remove(key: String): Unit = Option(m.remove(key)).foreach(release)
+
+    private[graft] def values: Seq[V] = {
+      import scala.jdk.CollectionConverters._
+      m.values.asScala.toSeq
+    }
+
+    private[Caches] def clear(): Unit = {
+      m.values.forEach(release(_))
+      m.clear()
+    }
+  }
+
+  private val registry = new java.util.concurrent.ConcurrentLinkedQueue[PerDir[_]]()
+
+  /** Release rule for `persist(...)`ed frames. */
+  def unpersist(df: DataFrame): Unit = { df.unpersist(); () }
+
+  /** Release rule for EAGER LOCAL CHECKPOINTS: Dataset.unpersist does
+    * not reach a local checkpoint's RDD-level blocks, so release goes
+    * through the LogicalRDD handle — otherwise the blocks hold
+    * executor storage until the ContextCleaner happens to GC them. */
+  def releaseCheckpointed(df: DataFrame): Unit =
     df.queryExecution.analyzed match {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
         lr.rdd.unpersist(false); ()
       case _ => ()
     }
 
-  def clearAll(): Unit = {
-    TextOps.clearSignatureCache()
-    MixOps.clearTokenCache()
-    SketchOps.clearHllRegCache()
-    GeoOps.clearAbwdPairCache()
-    // the ANN index tables (kNN edges + cluster labels + the
-    // NN-descent-refined edges + the persisted walk results) and the
-    // graph family's canonical edge projection derived from them —
-    // these were the one per-dir cache family missing from the
-    // release switch, so a corpus swap in a long-lived session served
-    // stale neighbor lists to the eight graph-consuming operators
-    AnnOps.clearKnnCache()
-    // the streaming family's retained run outputs (per-prefix
-    // checkpointed batches) hold persisted blocks like any cache
-    graft.streaming.MemorySinks.clearAll()
-    // the streaming scorer's fitted-model artifact is per-dir state
-    graft.streaming.StreamingMarkovScore.clearModelCache()
-    // the streaming span probe's persisted shingle-hash store
-    graft.streaming.StreamingSpanDedup.clearIndexCache()
-    // the parquet reader metadata cache (plans only, no data blocks)
-    graft.sources.Tables.clearTableCache()
+  /** Release rule for values that hold no blocks of their own
+    * (plan-only readers, driver-side maps): dropping the reference is
+    * the release. Never `Dataset.unpersist` these — that would uncache
+    * any same-result plan someone else persisted. */
+  def dropOnly(v: Any): Unit = ()
+
+  private[graft] def artifacts: Seq[PerDir[_]] = {
+    import scala.jdk.CollectionConverters._
+    registry.asScala.toSeq
   }
 
-  /** Count of per-dir ConcurrentHashMap-keyed-by-String session
-    * caches declared across the operator sources. The cache-wiring
-    * spec greps the source tree (any qualification of the class name,
-    * so an import-shortened declaration can't dodge it) and fails
-    * when a NEW cache appears without this constant being bumped —
-    * which forces the author to visit this file and wire the cache's
-    * release into [[clearAll]] (the defect has now shipped twice: the
-    * r15 unigram fit cache and the ANN kNN/cluster/edge family were
-    * both missing from the switch, serving stale per-dir tables after
-    * a corpus swap). */
-  val WiredCaches = 22
+  def clearAll(): Unit = registry.forEach(_.clear())
+
+  /** Build every declared index artifact for `d` (the bench's named
+    * setup step), in the fixed family order every main uses. */
+  def warmAll(s: SparkSession, d: String): Unit = {
+    TextOps.warmCaches(s, d)
+    AnnOps.warmCaches(s, d)
+    GeoOps.warmCaches(s, d)
+    MixOps.warmCaches(s, d)
+  }
 }

@@ -633,24 +633,8 @@ object GeoOps {
     * rows, scanned many times per labeling run (dependency build,
     * per-round claim joins, the chunked tail's fused lookups, final
     * claim resolution) — and identical across runs on the same dir.
-    * Released by [[clearAbwdPairCache]]. */
-  private val abwdPairCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  def clearAbwdPairCache(): Unit = {
-    // the cached entries are eager local checkpoints: Dataset.unpersist
-    // does not reach their RDD-level blocks, so release them through
-    // the LogicalRDD handle — otherwise per-dir entries hold executor
-    // storage until the ContextCleaner happens to GC them
-    def release(df: DataFrame): Unit =
-      df.queryExecution.analyzed match {
-        case lr: org.apache.spark.sql.execution.LogicalRDD =>
-          lr.rdd.unpersist(false); ()
-        case _ => ()
-      }
-    abwdPairCache.values.forEach(release(_))
-    abwdPairCache.clear()
-  }
+    * Released by [[Caches.clearAll]]. */
+  private val abwdPairCache = new Caches.PerDir[DataFrame](Caches.releaseCheckpointed)
 
   /** Materialize the per-dir ABWD pair table — the bench's named
     * SETUP step (the TextOps/AnnOps warmCaches pattern): the build is
@@ -707,8 +691,6 @@ object GeoOps {
     // processing position is (mag DESC, evid ASC)
     def before(aMag: Column, aEvid: Column, bMag: Column, bEvid: Column): Column =
       aMag > bMag || (aMag === bMag && aEvid < bEvid)
-    val dbg0 = sys.env.contains("GRAFT_DEBUG")
-    val tEntry = System.nanoTime()
     // materialize once per CALL unless the caller already did (the
     // per-dir cache hands in a checkpointed table; fixture tests hand
     // in local relations — either way one more checkpoint would cost
@@ -730,16 +712,10 @@ object GeoOps {
     val pairs =
       if (bareLeaf(pairsIn.queryExecution.analyzed)) pairsSel
       else pairsSel.localCheckpoint(true)
-    if (dbg0) System.err.println(
-      f"ABWD pairs built [${(System.nanoTime() - tEntry) / 1e9}%5.2fs]")
     // range(neq - 1): the order-last event never claims. A one-row
     // collect of a scalar, not a data-path collect.
     val lastEvid = events.orderBy(col("mag").asc, col("evid").desc).limit(1)
       .select("evid").collect().headOption.map(_.getLong(0)).getOrElse(Long.MinValue)
-
-    val dbg = sys.env.contains("GRAFT_DEBUG")
-    val t0 = System.nanoTime()
-    def dt = f"${(System.nanoTime() - t0) / 1e9}%6.2fs"
 
     var mains = events.select(col("evid")).limit(0).localCheckpoint(true)
     var undecided = events.select(col("evid"), col("mag")).localCheckpoint(true)
@@ -772,10 +748,6 @@ object GeoOps {
       .filter(before(col("d_mag"), col("d"), col("e_mag"), col("e")))
       .select("e", "d")
     val deps = dep1.unionByName(dep2).unionByName(dep3).distinct().localCheckpoint(true)
-    if (dbg0) System.err.println(
-      f"ABWD deps built [${(System.nanoTime() - tEntry) / 1e9}%5.2fs]")
-    if (dbg)
-      System.err.println(s"ABWD static [$dt]: pairs=${pairs.count()} deps=${deps.count()}")
 
     // fmc: each event's order-FIRST decided-main container (max mag,
     // then min evid). One broadcast-sized row per claimed-or-claimable
@@ -790,8 +762,6 @@ object GeoOps {
       col("evid").as("fm_evid")).limit(0).localCheckpoint(true)
     while (uCount > chunkBudget && rounds < MaxAbwdRounds) {
       rounds += 1
-      if (dbg)
-        System.err.println(s"ABWD round $rounds [$dt]: undecided=$uCount")
       // Rule A: an event whose first decided-main container is order-
       // earlier was claimed before its own step — main=false is
       // determined regardless of its other unresolved dependencies.
@@ -813,9 +783,7 @@ object GeoOps {
       // sources are still undecided evaluate main() exactly.
       val blocked = deps.join(und2.select(col("evid").as("d")), Seq("d"), "left_semi")
         .select(col("e").as("evid"))
-      def lap(tag: String): Unit = if (dbg) System.err.println(s"  ABWD lap $tag [$dt]")
       val ready = und2.join(blocked, Seq("evid"), "left_anti").localCheckpoint(true)
-      lap("ready")
       // Ready events passed the fmc filter with all containers decided,
       // so none is arrival-claimed: e is a mainshock iff it has an
       // available claimee x — x not an order-earlier mainshock itself,
@@ -840,9 +808,7 @@ object GeoOps {
         .join(availE, Seq("evid"), "left_semi")
         .filter(col("evid") =!= lit(lastEvid))
         .localCheckpoint(true)
-      lap("newMains")
       mains = mains.unionByName(newMains).localCheckpoint(true)
-      lap("mains")
       // merge the new mains' claim pairs into fmc (order-first wins)
       val newCand = claimPairs
         .join(newMains.select(col("evid").as("m_evid")), Seq("m_evid"), "left_semi")
@@ -853,16 +819,12 @@ object GeoOps {
           struct(col("fm_mag"), -col("fm_evid"))).as("fm"))
         .select(col("evid"), col("fm.fm_mag").as("fm_mag"), col("fm.fm_evid").as("fm_evid"))
         .localCheckpoint(true)
-      lap("fmc")
       undecided = und2.join(ready, Seq("evid"), "left_anti").localCheckpoint(true)
-      lap("undecided")
       uCount = undecided.count()
     }
     } // deps/fmc scope — rounds only run above the chunk budget
     require(uCount <= chunkBudget,
       s"ABWD greedy did not shrink to the driver tail in $MaxAbwdRounds rounds")
-    if (dbg)
-      System.err.println(s"ABWD tail [$dt]: undecided=$uCount after $rounds rounds")
     // Sequential driver finish over the WHOLE residual in ONE fused
     // pass (r18 — was processing-order chunks of tailThreshold events,
     // 2 collect jobs per chunk plus a rank+checkpoint pass; at sf0.1
@@ -899,8 +861,6 @@ object GeoOps {
       import sp.implicits._
       val (tailIds, uRows, inU) =
         abwdDriverTail(undecided, pairs, mains, lastEvid)
-      if (dbg) System.err.println(
-        s"ABWD tail done [$dt]: tailMains=${tailIds.size} uRows=${uRows.size}")
       val allMains =
         if (tailIds.isEmpty) mains else mains.unionByName(tailIds.toDF("evid"))
       // The residual's OUTPUT rows were fully resolved on the driver
@@ -991,10 +951,6 @@ object GeoOps {
          org.apache.spark.sql.expressions.UserDefinedFunction) = {
     val sp = pairs.sparkSession
     import sp.implicits._
-    val dbg = sys.env.contains("GRAFT_DEBUG")
-    val t0 = System.nanoTime()
-    def lap(tag: String, n: Int): Unit = if (dbg)
-      System.err.println(f"  ABWD tail lap $tag rows=$n [${(System.nanoTime() - t0) / 1e9}%5.2fs]")
     def beforeL(aMag: Double, aEvid: Long, bMag: Double, bEvid: Long): Boolean =
       aMag > bMag || (aMag == bMag && aEvid < bEvid)
     val u = undecided.select("evid", "mag").queryExecution.toRdd
@@ -1050,7 +1006,6 @@ object GeoOps {
         }
       }
     ingest(wave1, trackX = true)
-    lap("wave1", wave1.length)
     // wave 2 — containers of claimees OUTSIDE the residual (the
     // claimee-already-claimed check needs them): usually empty when
     // the tail covers the whole undecided set; bounded by the wave-1
@@ -1061,7 +1016,6 @@ object GeoOps {
       val wave2 = flagged(pairs.filter(inX(col("evid"))))
         .queryExecution.toRdd.map(_.copy()).collect()
       ingest(wave2, trackX = false)
-      lap("wave2", wave2.length)
     }
     val tailSet = new java.util.HashSet[Long]()
     val out = scala.collection.mutable.ArrayBuffer.empty[Long]
@@ -1084,7 +1038,6 @@ object GeoOps {
         if (canClaim) { tailSet.add(e); out += e }
       }
     }
-    lap("greedy", out.size)
     // driver OUTPUT rows for the whole residual: tail mains label
     // themselves (flag false, like every mainshock); each non-main
     // e∈U with ≥1 decided-main container gets its order-first main
@@ -1105,7 +1058,6 @@ object GeoOps {
         uRows += ((e, Option(best).map(_.id), best != null))
       }
     }
-    lap("uRows", uRows.size)
     (out.toSeq, uRows.toSeq, inU)
   }
 

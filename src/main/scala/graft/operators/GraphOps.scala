@@ -41,21 +41,9 @@ object GraphOps {
     * (degree table + two contribution passes, with r1's chain
     * evaluated twice). The edge list is O(N·K) rows — orders of
     * magnitude smaller than the corpus, exactly what a production
-    * graph job persists as its edge table. */
-  private val edgeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  /** Release the per-dir edge tables — called by
-    * [[AnnOps.clearKnnCache]] (the edges derive from the kNN graph,
-    * so the two caches drop together on a corpus refresh). */
-  private[operators] def clearEdgeCache(): Unit = {
-    edgeCache.values.forEach(df => { df.unpersist(); () })
-    edgeCache.clear()
-    // the dst-clustered symmetrized view derives from the same edges
-    // (checkpointed — LogicalRDD release)
-    symEdgeCache.values.forEach(Caches.releaseCheckpointed(_))
-    symEdgeCache.clear()
-  }
+    * graph job persists as its edge table. Derives from the kNN graph,
+    * so [[Caches.clearAll]] drops both together on a corpus refresh. */
+  private val edgeCache = new Caches.PerDir[DataFrame](Caches.unpersist)
 
   /** Symmetrized directed edges (both directions) — PageRank's view,
     * persisted per dir HASH-PARTITIONED ON dst (r17 optimization
@@ -81,8 +69,7 @@ object GraphOps {
         .localCheckpoint(true)
     })
 
-  private val symEdgeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  private val symEdgeCache = new Caches.PerDir[DataFrame](Caches.releaseCheckpointed)
 
   /** Per-vertex TRIANGLE counts on the thresholded kNN graph. The
     * classic distributed formulation: with canonical a<b<c ordering
@@ -163,6 +150,9 @@ object GraphOps {
     pagerankFull(s, d, PrFullIters)
 
   def pagerankFull(s: SparkSession, d: String, iters: Int): DataFrame = {
+    // the returned frame is the last round's checkpoint: with no round
+    // it would be a lazy frame over the released `ids` blocks
+    require(iters >= 1, s"pagerankFull needs iters >= 1, got $iters")
     // ids joins back into EVERY iteration — materialize the one-column
     // projection once per call instead of re-scanning the corpus 8×
     val ids = Tables.embeddings(s, d).select(col("vec_id"))

@@ -304,18 +304,10 @@ object SketchOps {
     * otherwise re-derives the events scan + register aggregation four
     * times (per-type estimates, the type dimension, and both arms of
     * the pair union); the table is ≤ HllM rows per type — constant
-    * memory at any corpus size. */
-  private val hllRegCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  /** Release the per-dir HLL register tables (the sigCache pattern's
-    * release path — [[graft.operators.TextOps.clearSignatureCache]]
-    * is the sibling): call between corpus versions of the SAME dir or
-    * the session serves stale registers and the persisted tables leak. */
-  def clearHllRegCache(): Unit = {
-    hllRegCache.values.forEach(df => { df.unpersist(); () })
-    hllRegCache.clear()
-  }
+    * memory at any corpus size. Released by [[Caches.clearAll]]: call
+    * it between corpus versions of the SAME dir or the session serves
+    * stale registers. */
+  private val hllRegCache = new Caches.PerDir[DataFrame](Caches.unpersist)
 
   private def hllRegs(s: SparkSession, d: String): DataFrame =
     hllRegCache.computeIfAbsent(d, _ =>

@@ -54,10 +54,9 @@ object TextOps {
     * smaller than the raw corpus. Lifetime: the entry (one per data
     * dir) stays cached for the session — intentional for the gate and
     * bench runs, which hit the whole dedup family; a long-lived
-    * service would call [[clearSignatureCache]] (or persist to a real
+    * service would call [[Caches.clearAll]] (or persist to a real
     * signature TABLE) between corpus versions. */
-  private val sigCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  private val sigCache = new Caches.PerDir[DataFrame](Caches.unpersist)
 
   private def hashed(s: SparkSession, d: String): DataFrame =
     sigCache.computeIfAbsent(d, _ =>
@@ -77,9 +76,8 @@ object TextOps {
     * one materialization (charged to the bench's named setup) feeds
     * them all. Three narrow columns, O(corpus tokens) rows — the
     * persisted hash store a production ExactSubstr pipeline keeps
-    * anyway. Released by [[clearSignatureCache]]. */
-  private val posCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+    * anyway. Released by [[Caches.clearAll]]. */
+  private val posCache = new Caches.PerDir[DataFrame](Caches.unpersist)
 
   private[graft] def positioned(s: SparkSession, d: String): DataFrame =
     posCache.computeIfAbsent(d, _ =>
@@ -571,9 +569,8 @@ object TextOps {
     * one narrow (doc_id, cluster_id) row per doc, shared by
     * `dup_clusters`, `dup_cluster_sizes` and `dedup_keep_best` — each
     * otherwise re-runs the verified-pair join + union-find tail.
-    * Released by [[clearSignatureCache]]; warmed by [[warmCaches]]. */
-  private val dupLabelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+    * Released by [[Caches.clearAll]]; warmed by [[warmCaches]]. */
+  private val dupLabelCache = new Caches.PerDir[DataFrame](Caches.unpersist)
 
   def dupClusters(s: SparkSession, d: String): DataFrame =
     dupLabelCache.computeIfAbsent(d, _ =>
@@ -800,11 +797,6 @@ object TextOps {
           .cast("long"))
   }
 
-  /** Unpersist every signature table [[hashed]] has cached (one entry
-    * per data dir). The gate and bench deliberately keep the cache
-    * warm across the dedup family; a long-lived service should call
-    * this between corpus versions instead of letting entries
-    * accumulate. */
   /** Materialize the session-cached signature and segment tables for
     * `d` — the bench's named SETUP step. The persisted
     * tokenize→shingle→md5 projection is the shared kernel of the whole
@@ -820,24 +812,6 @@ object TextOps {
     dupClusters(s, d).queryExecution.toRdd.count()
     positioned(s, d).queryExecution.toRdd.count()
     ()
-  }
-
-  def clearSignatureCache(): Unit = {
-    sigCache.values.forEach(df => { df.unpersist(); () })
-    sigCache.clear()
-    segCache.values.forEach(df => { df.unpersist(); () })
-    segCache.clear()
-    dupLabelCache.values.forEach(df => { df.unpersist(); () })
-    dupLabelCache.clear()
-    posCache.values.forEach(df => { df.unpersist(); () })
-    posCache.clear()
-    // tokenizer fit tables are lazy localCheckpoints (RDD blocks
-    // reclaimed by the ContextCleaner once the maps drop the
-    // references) — BOTH fits, or a corpus swap would serve a stale
-    // vocabulary and a restarted session would hand out DataFrames
-    // bound to the stopped SparkContext
-    bpeFitCache.clear()
-    uniFitCache.clear()
   }
 
   /** Per-(source, lang) corpus report — the monitoring surface a
@@ -879,9 +853,8 @@ object TextOps {
     * same disease the minhash family had before [[hashed]]; same
     * cure). The cached projection is 3 narrow columns. Lifetime
     * mirrors [[sigCache]]: session-long for the gate/bench, released
-    * by [[clearSignatureCache]]. */
-  private val segCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+    * by [[Caches.clearAll]]. */
+  private val segCache = new Caches.PerDir[DataFrame](Caches.unpersist)
 
   private def segmentRows(s: SparkSession, d: String): DataFrame =
     segCache.computeIfAbsent(d, _ => {
@@ -1514,9 +1487,11 @@ object TextOps {
   /** Fit result cached per data dir (the sigCache pattern):
     * `bpe_train` and `bpe_apply` share one loop execution instead of
     * each paying the argmax collects + rewrite checkpoints; both
-    * tables are vocab-sized. Released by [[clearSignatureCache]]. */
+    * tables are vocab-sized. Released by [[Caches.clearAll]] (the
+    * final word table is a localCheckpoint; the merge table a local
+    * relation). */
   private val bpeFitCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (DataFrame, DataFrame)]()
+    new Caches.PerDir[(DataFrame, DataFrame)](fit => Caches.releaseCheckpointed(fit._2))
 
   /** Shared fit loop: returns (merge-table DF, final vocab table). */
   private def bpeFitRounds(s: SparkSession, d: String): (DataFrame, DataFrame) =
@@ -1748,7 +1723,7 @@ object TextOps {
     * word table). Model state (the vocab + counts) is KB-sized at any
     * corpus scale — the [[bpeFitRounds]] contract. */
   private val uniFitCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Seq[(String, Long)], DataFrame)]()
+    new Caches.PerDir[(Seq[(String, Long)], DataFrame)](fit => Caches.releaseCheckpointed(fit._2))
 
   private[operators] def uniFit(s: SparkSession, d: String): (Seq[(String, Long)], DataFrame) =
     uniFitCache.computeIfAbsent(d, _ => uniFitUncached(s, d, UniSeedK, UniVocabK))

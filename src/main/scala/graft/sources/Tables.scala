@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.operators.Caches
 
 /** Parquet readers for the driver-provided star schema (TESTDATA.md).
   *
@@ -48,10 +49,7 @@ object Tables {
     * SparkContext identity so a restarted context never serves plans
     * bound to a stopped one. Cleared by
     * [[graft.operators.Caches.clearAll]]. */
-  private val tableCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  def clearTableCache(): Unit = tableCache.clear()
+  private val tableCache = new Caches.PerDir[DataFrame](Caches.dropOnly)
 
   def region(s: SparkSession, dir: String): DataFrame     = rd(s, dir, "region")
   def nation(s: SparkSession, dir: String): DataFrame     = rd(s, dir, "nation")

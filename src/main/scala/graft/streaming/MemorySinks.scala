@@ -4,6 +4,7 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import graft.operators.Caches
 
 /** Per-run result naming with garbage collection for the streaming
   * family's bounded (AvailableNow) runs.
@@ -34,26 +35,10 @@ object MemorySinks {
   }
 
   /** Previous run's checkpointed batch frames per prefix — released
-    * when the next run starts (Dataset.unpersist does not reach a
-    * local checkpoint's RDD blocks, so release goes through the
-    * LogicalRDD handle — the abwdPairCache rule). */
-  private val live =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[DataFrame]]()
-
-  /** Release every retained run's checkpointed batches — wired into
+    * when the next run starts, and by
     * [[graft.operators.Caches.clearAll]] like the per-dir operator
-    * caches (the cache-wiring spec counts this holder too). */
-  def clearAll(): Unit = {
-    live.values.forEach(_.foreach(release))
-    live.clear()
-  }
-
-  private def release(df: DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(false); ()
-      case _ => ()
-    }
+    * artifacts. */
+  private val live = new Caches.PerDir[Seq[DataFrame]](_.foreach(Caches.releaseCheckpointed))
 
   /** Run a bounded stream to completion under `Trigger.AvailableNow`,
     * materializing every batch's rows as persisted DISTRIBUTED blocks
@@ -80,7 +65,7 @@ object MemorySinks {
                       mode: String = "append"): (StreamingQuery, DataFrame) = {
     val n = seq.incrementAndGet()
     val name = s"${prefix}_$n"
-    if (n > 1) Option(live.remove(prefix)).foreach(_.foreach(release))
+    if (n > 1) live.remove(prefix)
     val batches = scala.collection.mutable.ArrayBuffer[DataFrame]()
     val q = stream.writeStream
       .foreachBatch { (b: DataFrame, _: Long) =>
@@ -89,7 +74,7 @@ object MemorySinks {
           // complete mode re-emits the FULL result table per batch —
           // the memory sink REPLACES its rows, so keep the last batch
           // only (append mode accumulates, matching the sink exactly)
-          if (mode == "complete") { batches.foreach(release); batches.clear() }
+          if (mode == "complete") { batches.foreach(Caches.releaseCheckpointed); batches.clear() }
           batches += p
         }
         ()

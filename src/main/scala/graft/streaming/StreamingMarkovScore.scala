@@ -5,7 +5,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
-import graft.operators.EventOps
+import graft.operators.{Caches, EventOps}
 
 /** Streaming per-user path scoring under a batch-fit Markov model —
   * the MODEL-SERVING stateful pattern the batch `markov_path_score`
@@ -66,12 +66,10 @@ object StreamingMarkovScore {
     * |types|² transition table is a batch-fit ARTIFACT — production
     * fits once and serves it to every scoring run, but through r16
     * each run() re-ran the fit query + collect (~0.5 s of a 1.9 s
-    * query at sf0.1). Cleared by
-    * [[graft.operators.Caches.clearAll]] via [[clearModelCache]]. */
+    * query at sf0.1). Dropped by
+    * [[graft.operators.Caches.clearAll]]. */
   private val modelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Map[(String, String), Long]]()
-
-  def clearModelCache(): Unit = modelCache.clear()
+    new Caches.PerDir[Map[(String, String), Long]](Caches.dropOnly)
 
   def run(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._

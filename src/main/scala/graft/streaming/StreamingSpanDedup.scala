@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, Trigger}
 
-import graft.operators.TextOps
+import graft.operators.{Caches, TextOps}
 import graft.functions.Portable
 
 /** STREAMING ingest-time ExactSubstr span probe — the continuously-fed
@@ -62,14 +62,8 @@ object StreamingSpanDedup {
     * incoming slice IS the store a production pipeline maintains
     * between ingests — through r16 each run() re-ran the distinct over
     * the positioned table. Released by
-    * [[graft.operators.Caches.clearAll]] via [[clearIndexCache]]. */
-  private val indexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  def clearIndexCache(): Unit = {
-    indexCache.values.forEach(graft.operators.Caches.releaseCheckpointed(_))
-    indexCache.clear()
-  }
+    * [[graft.operators.Caches.clearAll]]. */
+  private val indexCache = new Caches.PerDir[DataFrame](Caches.releaseCheckpointed)
 
   def run(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._

@@ -766,10 +766,7 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
     // depend on which spec ran first (observed r17: ±1 on the IVF
     // family between isolation and full-suite runs). Warm = the state
     // the bench and every real session run in.
-    operators.TextOps.warmCaches(spark, Sf)
-    operators.AnnOps.warmCaches(spark, Sf)
-    operators.GeoOps.warmCaches(spark, Sf)
-    operators.MixOps.warmCaches(spark, Sf)
+    Caches.warmAll(spark, Sf)
     val batchQueries = SparkEntry.queries.keys.filterNot(_.startsWith("streaming_"))
     for (name <- batchQueries) {
       val df = SparkEntry.queries(name)(spark, Sf)
@@ -801,7 +798,7 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
     // mechanical refactor can silently turn one corpus pass into 8-10
     // (conversion_lag scanned events 8×, rfm_segments 10× in r13).
     // Counts come from the same formatted plans committed as the
-    // dev/plans_r* audit artifacts. Default cap: 2 scans per base
+    // dev/plans_r17.txt audit artifact. Default cap: 2 scans per base
     // table per query (one data pass + one independent aggregate /
     // join-back leg). Anything above must be DECLARED here. The
     // declared queries fall into two classes, both bounded:
@@ -893,25 +890,23 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("every per-dir session cache is wired into Caches.clearAll") {
-    // greps the operator sources for per-dir cache declarations and
-    // compares against the count declared NEXT TO the release switch:
-    // adding a cache without bumping Caches.WiredCaches fails here,
-    // and bumping it means looking at clearAll — the friction that
-    // prevents the stale-cache-after-corpus-swap defect from shipping
-    // a third time
+    // a per-dir cache is a Caches.PerDir, which registers itself with
+    // the release switch — so the only String-keyed concurrent map in
+    // the sources may be the registry's own; a hand-rolled one would
+    // escape clearAll and serve stale tables after a corpus swap
     import scala.jdk.CollectionConverters._
     val srcRoot = java.nio.file.Paths.get("src/main/scala/graft")
-    val declared = java.nio.file.Files.walk(srcRoot).iterator().asScala
+    val declaring = java.nio.file.Files.walk(srcRoot).iterator().asScala
       .filter(_.toString.endsWith(".scala"))
-      .map(p => new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
-      // any qualification of the class name counts — an imported or
-      // partially-qualified ConcurrentHashMap must not dodge the gate
-      .map(s => "new (java\\.util\\.concurrent\\.)?(concurrent\\.)?ConcurrentHashMap\\[String".r
-        .findAllIn(s).length)
-      .sum
-    assert(declared == Caches.WiredCaches,
-      s"$declared per-dir caches declared in source but Caches.WiredCaches says " +
-        s"${Caches.WiredCaches} — wire the new cache into Caches.clearAll and bump the constant")
+      .flatMap { p =>
+        val src = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+        // any qualification of the class name counts — an imported or
+        // partially-qualified ConcurrentHashMap must not dodge the gate
+        "ConcurrentHashMap\\[String".r.findAllIn(src).map(_ => p.getFileName.toString)
+      }.toSeq
+    assert(declaring == Seq("Caches.scala"),
+      s"String-keyed ConcurrentHashMaps in ${declaring.mkString(", ")} — " +
+        "declare a per-dir cache as a Caches.PerDir instead")
   }
 
   test("exchange reuse actually fires for the largest reuse-dependent plans") {
@@ -5389,6 +5384,11 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(loop8 != loop2, "8 iterations changed nothing — loop is vacuous")
   }
 
+  test("pagerank_full rejects a solve of no iterations") {
+    // zero rounds would return a lazy frame over the released id blocks
+    intercept[IllegalArgumentException](GraphOps.pagerankFull(spark, Sf, 0))
+  }
+
   test("rank/quantile operators run no data-sized single-partition window") {
     // The r12 scale-killer class: a global Window (empty partition
     // spec = ALL rows through one task) or a Window partitioned only
@@ -5419,5 +5419,37 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
           s"$name windows only on low-cardinality key(s) $refs — unsplittable data-sized partition")
       }
     }
+  }
+
+  // LAST spec of the class: it empties every per-dir artifact the
+  // specs above assume warm
+  test("Caches.clearAll releases every registered per-dir artifact") {
+    Caches.warmAll(spark, Sf)
+    for (name <- Seq("bpe_train", "unigram_lm_train", "hll_intersect", "pagerank_knn",
+        "ann_recall_report", "streaming_markov_score", "streaming_span_dedup", "streaming_hll"))
+      SparkEntry.queries(name)(spark, Sf).collect()
+    assert(Caches.artifacts.forall(_.values.nonEmpty),
+      "a registered artifact is still empty — add one of its consumers to the fill above")
+    // the RDD ids the entries hold: an eager checkpoint's LogicalRDD,
+    // a persisted frame's cached column buffers
+    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    def held(v: Any): Seq[Int] = v match {
+      case df: org.apache.spark.sql.Dataset[_] => df.queryExecution.analyzed match {
+        case lr: org.apache.spark.sql.execution.LogicalRDD => Seq(lr.rdd.id)
+        case _ => cache.lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
+          .map(_.cachedRepresentation.cacheBuilder)
+          .filter(_.isCachedColumnBuffersLoaded).map(_.cachedColumnBuffers.id).toSeq
+      }
+      case xs: Iterable[_] => xs.toSeq.flatMap(held)
+      case p: Product => p.productIterator.toSeq.flatMap(held)
+      case _ => Nil
+    }
+    val ids = Caches.artifacts.flatMap(_.values).flatMap(held).toSet
+    assert(ids.nonEmpty && ids.subsetOf(spark.sparkContext.getPersistentRDDs.keySet))
+    Caches.clearAll()
+    assert(Caches.artifacts.forall(_.values.isEmpty), "clearAll left an entry behind")
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet.intersect(ids)
+    assert(leaked.isEmpty, s"clearAll left the blocks of RDDs $leaked persisted")
   }
 }
